@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registry query at the target scale
   * factor and prints ONE JSON line for the driver.
@@ -99,15 +98,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val nReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     spark.range(1000000).selectExpr("sum(id)").collect()
     Tables.load(spark, sfDir, "region").count()
     SparkEntry.entry(spark).count()
@@ -148,15 +140,11 @@ object Bench {
     // array_intersect (measured +0.9 s of honest work at sf0.1), and a
     // grouped aggregate's sum/avg expressions vanish the same way. The
     // noop sink evaluates every column of every row and discards it.
-    // This is a MEASUREMENT-BUG fix (disclosed in OPTIMIZATION_r08.md;
-    // old count-based artifacts BENCH_r0*.json are retained, and
-    // SPARK_GRAFT_BENCH_ACTION=count reproduces the old action for
-    // crosswalk runs); affected queries read slower because more of
-    // their declared work is now actually timed.
-    val useNoop = sys.env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "noop") != "count"
+    // The count-based artifacts BENCH_r0*.json predate this action and
+    // are not comparable with it (crosswalk in OPTIMIZATION_r08.md and
+    // bench_r08_count_crosswalk.json).
     def consume(df: org.apache.spark.sql.DataFrame): Unit =
-      if (useNoop) df.write.format("noop").mode("overwrite").save()
-      else { df.count(); () }
+      df.write.format("noop").mode("overwrite").save()
     val settleSec = scala.collection.mutable.Map[String, Double]()
     def measure(name: String): (Seq[Double], Seq[Long]) = {
       val fn = SparkEntry.queries(name)

@@ -1,13 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.queries.{BasketQueries, CorpusQueries, DedupQueries,
   EncodeQueries, GraphQueries, LayoutQueries, LinalgQueries, MLQueries,
-  ProfileQueries, RelationalQueries, SampleQueries, SearchQueries,
-  SeriesQueries, SimilarityQueries, SketchQueries, SourceQueries,
-  StreamTextQueries, TextQueries}
+  ProfileQueries, QueryFamily, RelationalQueries, SampleQueries,
+  SearchQueries, SeriesQueries, SimilarityQueries, SketchQueries,
+  SourceQueries, StreamTextQueries, TextQueries}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -19,28 +18,29 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RelationalQueries.queries("q26_shape")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.queries ++ SeriesQueries.queries ++
-      TextQueries.queries ++ DedupQueries.queries ++
-      SimilarityQueries.queries ++ MLQueries.queries ++
-      StreamTextQueries.queries ++ SourceQueries.queries ++
-      SampleQueries.queries ++ BasketQueries.queries ++
-      LinalgQueries.queries ++ SearchQueries.queries ++
-      CorpusQueries.queries ++ SketchQueries.queries ++
-      LayoutQueries.queries ++ GraphQueries.queries ++
-      ProfileQueries.queries ++ EncodeQueries.queries
+  /** The registry: one entry per family of SURVEY.md §2 operators. */
+  val families: Seq[QueryFamily] = Seq(
+    RelationalQueries, SeriesQueries, TextQueries, DedupQueries,
+    SimilarityQueries, MLQueries, StreamTextQueries, SourceQueries,
+    SampleQueries, BasketQueries, LinalgQueries, SearchQueries,
+    CorpusQueries, SketchQueries, LayoutQueries, GraphQueries,
+    ProfileQueries, EncodeQueries)
+
+  /** Union of the families' maps; a name two families define fails
+    * here instead of one silently overwriting the other. */
+  private def union[V](maps: Seq[Map[String, V]], what: String)
+      : Map[String, V] = {
+    val dups = maps.flatMap(_.keys).groupBy(identity)
+      .collect { case (k, v) if v.size > 1 => k }
+    require(dups.isEmpty, s"duplicate $what names: ${dups.mkString(",")}")
+    maps.reduce(_ ++ _)
+  }
+
+  /** Every registry query by name. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    union(families.map(_.queries), "query")
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    RelationalQueries.oracles ++ SeriesQueries.oracles ++
-      TextQueries.oracles ++ DedupQueries.oracles ++
-      SimilarityQueries.oracles ++ MLQueries.oracles ++
-      StreamTextQueries.oracles ++ SourceQueries.oracles ++
-      SampleQueries.oracles ++ BasketQueries.oracles ++
-      LinalgQueries.oracles ++ SearchQueries.oracles ++
-      CorpusQueries.oracles ++ SketchQueries.oracles ++
-      LayoutQueries.oracles ++ GraphQueries.oracles ++
-      ProfileQueries.oracles ++ EncodeQueries.oracles
+  val oracleSql: Map[String, String] = union(families.map(_.oracles), "oracle")
 }

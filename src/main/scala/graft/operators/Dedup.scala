@@ -775,9 +775,10 @@ object Dedup {
     val edges = star.select(col("u"), col("lbl").as("v"))
       .union(star.select(col("lbl").as("u"), col("u").as("v")))
       .filter(col("u") =!= col("v"))
-    // Track each round's checkpoint blocks (rdd ids that appear across
-    // the localCheckpoint call) so the PREVIOUS round can be freed the
-    // moment the next round is materialized (shared [[Frames]] helper).
+    // Track each round's checkpoint blocks (the checkpoint's own rdd
+    // id) so the PREVIOUS round can be freed the moment the next round
+    // is materialized (shared [[Frames]] helper); `star`'s cache stays
+    // until the loop ends.
     def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) =
       Frames.checkpointTracked(df)
     def free(ids: Set[Int]): Unit = Frames.free(star, ids)

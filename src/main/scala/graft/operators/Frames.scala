@@ -22,18 +22,20 @@ import org.apache.spark.sql.DataFrame
   * `spark.catalog.clearCache()` cannot drop them) and are reclaimed
   * by the ContextCleaner once the frame is unreachable; for prompt
   * in-loop reuse, [[checkpointTracked]] returns the block-backing RDD
-  * ids so a superseded round can be freed with [[free]] the moment
-  * its successor is materialized. */
+  * id so a superseded round can be freed with [[free]] the moment its
+  * successor is materialized. */
 private[graft] object Frames {
 
-  /** Eagerly checkpoint `df`; returns the flat-plan frame plus the
-    * persistent-RDD ids that appeared across the call (the checkpoint
-    * blocks), for later [[free]]. */
+  /** Eagerly checkpoint `df`; returns the flat-plan frame plus the id
+    * of the RDD behind its LogicalRDD (the checkpoint blocks), for
+    * later [[free]]. Only that id: a frame the caller persisted and
+    * first materialized inside this call, or one another query
+    * persisted meanwhile, is not ours to free. */
   def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
     val out = df.localCheckpoint(true)
-    (out, sc.getPersistentRDDs.keySet.toSet -- before)
+    (out, out.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet)
   }
 
   /** Round-robin spread of a frame across the session's cores — ONLY
@@ -77,7 +79,7 @@ private[graft] object Frames {
     * estimate is file-size-based for scans, propagates through
     * projections/joins, and survives `localCheckpoint` (LogicalRDD
     * carries originStats); an unknown estimate saturates huge and
-    * falls back to the conf width — exactly today's behavior. At
+    * falls back to the conf width, `numShufflePartitions`. At
     * corpus scale bytes/advisory far exceeds any sane conf width, so
     * the conf cap governs, as before. Costs one analysis+optimization
     * pass of `df` (no job). */

@@ -750,12 +750,11 @@ object Similarity {
     * top-k heap — all corpus-sublinear. Results equal [[knnJoinHier]]
     * exactly for identical parameters (SimilaritySpec law). */
   /** The two-stage pick of [[knnJoinHierTable]]: (query_id, qv, cell)
-    * probe rows — exposed package-private for the stage-attribution
-    * dev probe ([[graft.tools.AnnTableProbe]]). */
-  private[graft] def hierTablePick(index: HierIvfTableIndex,
-                                   queries: DataFrame,
-                                   id: String, vec: String,
-                                   nprobe: Int, nsp: Int): DataFrame = {
+    * probe rows. */
+  private def hierTablePick(index: HierIvfTableIndex,
+                            queries: DataFrame,
+                            id: String, vec: String,
+                            nprobe: Int, nsp: Int): DataFrame = {
     // Super pick = the codegen'd flat kernel over the super matrix
     // (supers are always driver-small — √nCells — even when the cell
     // layer is distributed state): same (cos desc, index asc)

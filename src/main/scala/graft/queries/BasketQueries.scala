@@ -29,7 +29,7 @@ import graft.Tables
   * `events.ts` is epoch-nanos long (nanosAsLong parquet read);
   * integer-divide to micros exactly like StreamTextQueries.
   */
-object BasketQueries {
+object BasketQueries extends QueryFamily {
 
   private val tsUs = expr("ts DIV 1000")
   private val itemCol = get_json_object(col("props"), "$.k").cast("int")

@@ -11,7 +11,7 @@ import graft.operators.{Chunking, Dedup, Incremental, Snapshot}
   * Each has a DuckDB oracle (integer/passthrough outputs — trivially
   * exact).
   */
-object CorpusQueries {
+object CorpusQueries extends QueryFamily {
 
   private val CHUNK = 64
   private val STRIDE = 48

@@ -17,7 +17,7 @@ import graft.operators.Dedup
   * check validates the whole pipeline, not just the verifier.
   * SimHash and IVF have no SQL-expressible oracle → rows-only + specs.
   */
-object DedupQueries {
+object DedupQueries extends QueryFamily {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

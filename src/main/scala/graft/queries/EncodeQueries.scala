@@ -9,7 +9,7 @@ import graft.operators.Encode
 /** Feature-preparation queries: label encoding, the hashing trick, and
   * per-dimension standardization — the raw-column → model-matrix step
   * of a training pipeline, each stage oracle-matched. */
-object EncodeQueries {
+object EncodeQueries extends QueryFamily {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -29,7 +29,7 @@ import graft.operators.Graph
   * ordering, and both conventions are equally arbitrary; what must
   * match is the decoded output, and it does, bit-for-bit.
   */
-object GraphQueries {
+object GraphQueries extends QueryFamily {
 
   private val Iters = 3
 

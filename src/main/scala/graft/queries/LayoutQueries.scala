@@ -14,7 +14,7 @@ import graft.functions.ZOrderKey
   * write path is covered by LayoutSpec (its sampled boundaries are not
   * cross-engine reproducible).
   */
-object LayoutQueries {
+object LayoutQueries extends QueryFamily {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

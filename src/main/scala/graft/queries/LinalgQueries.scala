@@ -14,7 +14,7 @@ import graft.operators.Gemm
   * to 6dp because the engines' double→decimal casts disagree in the
   * 18th fractional digit (see Gemm.gram scaladoc).
   */
-object LinalgQueries {
+object LinalgQueries extends QueryFamily {
 
   private val bs = 16
   private val dim = 64

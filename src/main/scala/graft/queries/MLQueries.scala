@@ -10,7 +10,7 @@ import graft.operators.ML
   * oracle-matched; the spark.ml kernels are seeded-deterministic but not
   * SQL-expressible → rows-only + MLSpec golden tests.
   */
-object MLQueries {
+object MLQueries extends QueryFamily {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

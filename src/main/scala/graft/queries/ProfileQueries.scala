@@ -8,7 +8,7 @@ import graft.operators.{Profile, Sketch}
 
 /** Profiling queries: per-column statistics (with the portable-HLL
   * ndv) and a fixed-bound histogram. */
-object ProfileQueries {
+object ProfileQueries extends QueryFamily {
 
   private val ProfCols = Seq("event_id", "user_id", "event_type", "props")
 

@@ -20,7 +20,7 @@ import graft.functions.Exact.{d, dsum}
   *    examples/queries_devel/q25.jl:3-27 (count-distinct/max/sum
   *    aggregate + union)
   */
-object RelationalQueries {
+object RelationalQueries extends QueryFamily {
 
   private def t(s: SparkSession, dir: String, name: String) =
     Table(Tables.load(s, dir, name))

@@ -9,7 +9,7 @@ import graft.operators.Sampling
 /** Deterministic sampling / split queries — exact oracle matches because
   * membership is a pure md5-prefix function of the key, identical in
   * both engines. */
-object SampleQueries {
+object SampleQueries extends QueryFamily {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

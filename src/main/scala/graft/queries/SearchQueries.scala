@@ -11,7 +11,7 @@ import graft.operators.Search
   * call is the only op whose last ulp may differ between libms; all
   * other arithmetic is correctly-rounded IEEE, identical by spec).
   */
-object SearchQueries {
+object SearchQueries extends QueryFamily {
 
   private val terms = Seq("spark", "join", "vector")
   private val termList = terms.map(t => s"'$t'").mkString(", ")

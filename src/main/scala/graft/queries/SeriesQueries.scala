@@ -12,7 +12,7 @@ import graft.functions.Exact.d
   * (/root/reference/test/cumsum_test.jl, stencil_test1.jl) at fixture
   * scale.
   */
-object SeriesQueries {
+object SeriesQueries extends QueryFamily {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

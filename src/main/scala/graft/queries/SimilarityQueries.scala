@@ -10,7 +10,7 @@ import graft.operators.Similarity
   * set is the first 16 vectors (broadcast-small, per the ANN contract);
   * the corpus is the whole table.
   */
-object SimilarityQueries {
+object SimilarityQueries extends QueryFamily {
 
   private def emb(s: SparkSession, dir: String) =
     Tables.load(s, dir, "embeddings")

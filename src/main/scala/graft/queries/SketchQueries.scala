@@ -10,7 +10,7 @@ import graft.operators.Sketch
   * exact answer it approximates (the differential proves BOTH the
   * estimate arithmetic and that the sketch state is cross-engine
   * identical). */
-object SketchQueries {
+object SketchQueries extends QueryFamily {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

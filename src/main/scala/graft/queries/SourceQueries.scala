@@ -12,7 +12,7 @@ import graft.sources.TextIO
   * aggregating, so the oracle (which reads the original parquet) only
   * matches if the round-trip is lossless.
   */
-object SourceQueries {
+object SourceQueries extends QueryFamily {
 
   private val ordersKeys = StructType(Seq(
     StructField("o_orderkey", LongType), StructField("o_custkey", LongType)))

@@ -12,7 +12,7 @@ import graft.streaming.{Sessionize, StreamCms, StreamDedup, StreamDrift,
   * plumbing queries (rows-only: the stub decoder is not
   * SQL-expressible; the plumbing is covered by MultimodalSpec).
   */
-object StreamTextQueries {
+object StreamTextQueries extends QueryFamily {
 
   /** events.ts is epoch-nanos long (Spark 4 legacy nanosAsLong read);
     * integer-divide to micros — a double division would lose precision

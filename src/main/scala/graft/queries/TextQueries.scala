@@ -10,7 +10,7 @@ import graft.functions.Text
   * bit-exact DuckDB oracle (same expression tree, same evaluation order —
   * the driver compares full-precision float reprs).
   */
-object TextQueries {
+object TextQueries extends QueryFamily {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

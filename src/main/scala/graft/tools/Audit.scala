@@ -3,9 +3,9 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{bit_xor, col, count, lit, struct, xxhash64}
 
-/** Shared instrument helpers for the family scale-audit tools
-  * (Text/Sample/Misc/Stream/...ScaleAudit) — one definition so an
-  * instrument fix lands everywhere at once. */
+/** Shared instrument helpers for [[Probe]], [[AnnScaleAudit]] and
+  * [[StallDiag]] — one definition so an instrument fix lands
+  * everywhere at once. */
 object Audit {
 
   /** Locale-pinned seconds formatting: the default-locale

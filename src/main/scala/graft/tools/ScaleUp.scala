@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * table is replicated k times with its own keys and its foreign keys
   * into scaled tables shifted by copy · 10⁸, so join selectivity,
   * fan-out, and value distributions match the source exactly while row
-  * counts grow k×. Timing-only data — the correctness oracles never
+  * counts grow k×. `documents` copies also carry a token suffix
+  * ([[saltTokens]]). Timing-only data — the correctness oracles never
   * run against it. */
 object ScaleUp {
 
@@ -26,6 +27,18 @@ object ScaleUp {
     "events" -> Seq("event_id", "user_id"),
     "documents" -> Seq("doc_id"),
     "embeddings" -> Seq("vec_id"))
+
+  /** Copy i ≥ 1 of `documents` suffixes every token (\S+ run) with
+    * `⸚i`, a character no tokenizer joins to its neighbour, so no
+    * shingle or fingerprint is shared across copies and the true
+    * near-dup pairs grow exactly k×. Plain copies would turn every
+    * document into a k-clique and hit the LSH bucket cap. `n_chars`
+    * follows the new text length. Copy 0 is the source verbatim. */
+  private def saltTokens(table: String, df: DataFrame, i: Int): DataFrame =
+    if (table != "documents" || i == 0) df
+    else df
+      .withColumn("text", regexp_replace(col("text"), "(\\S+)", "$1⸚" + i))
+      .withColumn("n_chars", length(col("text")).cast("long"))
 
   def run(spark: SparkSession, src: String, dst: String, k: Int,
           tables: Set[String] = shiftCols.keySet): Unit = {
@@ -53,7 +66,7 @@ object ScaleUp {
       val scaled: DataFrame =
         if (keys.isEmpty) base
         else (0 until k).map { i =>
-          keys.foldLeft(base) { (df, c) =>
+          keys.foldLeft(saltTokens(table, base, i)) { (df, c) =>
             val shiftedMax = maxKeys(c) + (k - 1).toLong * Off
             val tgt = base.schema(c).dataType match {
               case org.apache.spark.sql.types.IntegerType
@@ -78,13 +91,7 @@ object ScaleUp {
       case Array(s, d, k, ts) =>
         (Array(s, d, k), ts.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     run(spark, src, dst, kStr.toInt, tables)
     spark.stop()
   }

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev diagnostic for the episodic 10-20x single-execution stalls the
@@ -29,16 +28,9 @@ object StallDiag {
     val dir = args(0)
     val op = if (args.length > 1) args(1) else "minhash"
     val laps = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("GRAFT_CODEGEN_CACHE", "100"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(conf = Seq(
+      "spark.sql.codegen.cache.maxEntries" ->
+        sys.env.getOrElse("GRAFT_CODEGEN_CACHE", "100")))
     val runMs = new LongAdder; val cpuNs = new LongAdder
     val gcMs = new LongAdder; val fetchNs = new LongAdder
     val deserMs = new LongAdder; val tasks = new LongAdder

@@ -37,4 +37,26 @@ class CacheHygieneSpec extends SparkSpec {
     assert(leaked.isEmpty,
       s"queries leaving CacheManager entries: ${leaked.mkString(", ")}")
   }
+
+  test("checkpointTracked frees only its own blocks, not a frame it first materialized") {
+    // nearDupClusters' `star` shape: persisted lazily, first computed
+    // inside the checkpoint of a frame derived from it. Freeing the
+    // tracked round must leave star's cache registered.
+    import org.apache.spark.sql.functions.col
+    import graft.operators.Frames
+    val sc = spark.sparkContext
+    def persistent() = sc.getPersistentRDDs.keySet.toSet
+    val star = spark.range(0, 1000).toDF("u")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val before = persistent()
+    val (round, ids) =
+      Frames.checkpointTracked(star.groupBy(col("u") % 7).count())
+    val starCache = persistent() -- before -- ids
+    assert(ids.size == 1, s"tracked $ids")
+    assert(starCache.size == 1, s"star's cache RDD not left out of $ids")
+    Frames.free(round, ids)
+    assert(starCache.subsetOf(persistent()))
+    assert(ids.intersect(persistent()).isEmpty)
+    star.unpersist(true)
+  }
 }

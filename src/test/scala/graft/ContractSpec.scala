@@ -10,17 +10,7 @@ class ContractSpec extends SparkSpec {
   }
 
   test("query names are unique across modules (no silent map overwrite)") {
-    val all = Seq(
-      graft.queries.RelationalQueries.queries, graft.queries.SeriesQueries.queries,
-      graft.queries.TextQueries.queries, graft.queries.DedupQueries.queries,
-      graft.queries.SimilarityQueries.queries, graft.queries.MLQueries.queries,
-      graft.queries.StreamTextQueries.queries, graft.queries.SourceQueries.queries,
-      graft.queries.SampleQueries.queries, graft.queries.BasketQueries.queries,
-      graft.queries.LinalgQueries.queries, graft.queries.SearchQueries.queries,
-      graft.queries.CorpusQueries.queries, graft.queries.SketchQueries.queries,
-      graft.queries.LayoutQueries.queries, graft.queries.GraphQueries.queries,
-      graft.queries.ProfileQueries.queries, graft.queries.EncodeQueries.queries)
-    val names = all.flatMap(_.keys)
+    val names = SparkEntry.families.flatMap(_.queries.keys)
     val dups = names.groupBy(identity).filter(_._2.size > 1).keys
     assert(dups.isEmpty, s"duplicate query names: $dups")
     assert(names.toSet == SparkEntry.queries.keySet)

@@ -43,5 +43,17 @@ class ScaleUpSpec extends SparkSpec {
     val dstHist = l.groupBy("l_quantity").count()
       .collect().map(r => r.get(0) -> r.getLong(1)).toMap
     assert(dstHist == srcHist.map { case (k, v) => k -> 2 * v })
+
+    // documents: copy 0 is the source; copy 1 shares no token with it
+    val srcDocs = spark.read.parquet(s"$src/documents.parquet")
+    val docs = spark.read.parquet(s"$dst/documents.parquet")
+    val copy0 = docs.filter(col("doc_id") < 100000000L)
+    assert(copy0.exceptAll(srcDocs).isEmpty && srcDocs.exceptAll(copy0).isEmpty)
+    def tokens(df: org.apache.spark.sql.DataFrame) =
+      df.select(explode(split(col("text"), "\\s+")).as("t"))
+        .filter(col("t") =!= "").distinct()
+    val copy1 = docs.filter(col("doc_id") >= 100000000L)
+    assert(tokens(copy1).join(tokens(copy0), "t").isEmpty)
+    assert(copy1.filter(col("n_chars") =!= length(col("text"))).isEmpty)
   }
 }
